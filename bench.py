@@ -497,7 +497,13 @@ def _final_line(out: dict, phases: dict, timings: dict) -> str:
     remaining HEADLINE names up to BUDGET bytes; "phases" values become
     [build, serve, build_ratio, serve_ratio] arrays and "cpu_alarms" is
     capped at 3 names — the labeled full forms stay in BENCH_AB.json
-    and the early stdout line."""
+    and the early stdout line.
+
+    A line still over HARD_CAP degrades instead of failing the run,
+    cheapest loss first: values rounded to 2 decimals, then "phases"
+    dropped, then "cpu_alarms", then the non-floor names; floor names
+    that still do not fit go last-first and are listed in
+    "missing_floor"."""
     BUDGET = 1900
     HARD_CAP = 1990  # driver tail capture is ~2000 chars
     line_out = dict(out)
@@ -515,8 +521,14 @@ def _final_line(out: dict, phases: dict, timings: dict) -> str:
         line_out["cpu_alarms"] = line_out["cpu_alarms"][:3]
     kept: dict[str, float] = {}
     line_out["queries"] = kept
-    line_out["queries_omitted"] = 0
     floor = set(PRINT_FLOOR)
+
+    def size() -> int:
+        line_out["queries_omitted"] = sum(
+            1 for n in HEADLINE if n in timings and n not in kept
+        )
+        return len(json.dumps(line_out, separators=(",", ":")))
+
     for name in HEADLINE:
         if name in timings and name in floor:
             kept[name] = timings[name]
@@ -524,15 +536,40 @@ def _final_line(out: dict, phases: dict, timings: dict) -> str:
         if name not in timings or name in kept:
             continue
         kept[name] = timings[name]
-        if len(json.dumps(line_out, separators=(",", ":"))) > BUDGET:
+        if size() > BUDGET:
             del kept[name]
             break
-    line_out["queries_omitted"] = sum(
-        1 for n in HEADLINE if n in timings and n not in kept
-    )
-    line = json.dumps(line_out, separators=(",", ":"))
-    assert len(line) <= HARD_CAP, len(line)
-    return line
+
+    def _round(v):
+        return round(v, 2) if isinstance(v, float) else v
+
+    def round_values():
+        for n in kept:
+            kept[n] = _round(kept[n])
+        if "phases" in line_out:
+            line_out["phases"] = {
+                n: [_round(v) for v in row]
+                for n, row in line_out["phases"].items()
+            }
+
+    def drop_non_floor():
+        for n in [n for n in kept if n not in floor]:
+            del kept[n]
+
+    for degrade in (
+        round_values,
+        lambda: line_out.pop("phases", None),
+        lambda: line_out.pop("cpu_alarms", None),
+        drop_non_floor,
+    ):
+        if size() <= HARD_CAP:
+            break
+        degrade()
+    missing: list[str] = []
+    while size() > HARD_CAP and kept:
+        missing.insert(0, kept.popitem()[0])
+        line_out["missing_floor"] = missing
+    return json.dumps(line_out, separators=(",", ":"))
 
 
 def main() -> None:
@@ -755,6 +792,8 @@ def main() -> None:
     #    arrays (a_build/a_serve are derivable from ratio × b-side),
     #  - "cpu_alarms" is capped at 3 names (full list in the detail's
     #    "cpu_alarms_full").
+    # A line that still overflows degrades step by step (see
+    # _final_line) instead of losing the run.
     print(_final_line(out, phases, timings))
 
 

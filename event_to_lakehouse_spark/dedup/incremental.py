@@ -488,11 +488,14 @@ class ExactDedupIndex:
         if bloom is not None:
             # independent stores fed by the persisted resolution frame:
             # overlap the fingerprint append with the bitmap merge
-            # (guide §2.6). Either commit may land first; a crash
-            # between them leaves at worst bitmap-ahead-of-index —
-            # bloom FALSE POSITIVES only (the exact probe resolves
-            # them), never a false negative, and the shared token
-            # converges the retry exactly as the sequential form did.
+            # (guide §2.6). Either commit may land first, so a crash
+            # between them leaves one of two states. Bitmap ahead of
+            # index: Bloom FALSE POSITIVES only, which the exact probe
+            # resolves. Index ahead of bitmap: the bitmap is missing
+            # this batch's new fingerprints, so a later re-send of that
+            # content is Bloom-negative and is admitted as new until
+            # this batch replays under its token. The shared token
+            # converges that replay exactly as the sequential form did.
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=1) as pool:

@@ -26,7 +26,10 @@ queries rank against the broadcast centroid table and probe their
 ``maintain()``); ADC scores the survivors via broadcast per-query LUTs
 without touching any embedding; only the per-query shortlist re-reads
 full vectors for the exact re-rank. Nothing corpus-sized shuffles or
-broadcasts in any stage.
+broadcasts in any stage. The query side (query vectors, probed cells,
+LUTs) is query-sized: ``topk`` derives it once per call, on the driver,
+so its four consumers do not each re-derive it from the caller's query
+frame.
 
 Reference parity note: the reference pipeline (6 files) has no vector
 search at all — this tier fills the ABSENT-at-scale gap the brief's
@@ -179,6 +182,18 @@ def coarse_centroids_trained(
     ).select("cent_id", "c_emb", l2_norm("c_emb").alias("c_norm"))
     v.unpersist()  # cents is materialized; nothing re-derives v
     return out
+
+
+def _driver_local(df: DataFrame) -> DataFrame:
+    """``df`` evaluated once and re-wrapped as a local relation over its
+    collected rows (they stay in the driver JVM; no Python round trip).
+    Later scans read the rows from the plan itself: no job, no task, no
+    persisted block to release. Query-sized frames only."""
+    spark = df.sparkSession
+    jdf = spark._jsparkSession.createDataFrame(
+        df._jdf.collectAsList(), df._jdf.schema()
+    )
+    return DataFrame(jdf, spark)
 
 
 def _coarse_trained_ctes(stride_sql: str, n_iters: int) -> str:
@@ -377,35 +392,44 @@ class IVFPQIndex:
     ) -> DataFrame:
         """The three-stage serve over STORED artifacts: probe cells →
         ADC over probed codes → exact re-rank of the shortlist.
-        ``emb`` supplies full vectors for the shortlist re-read only
-        (and the query vectors); equivalence with the one-shot
-        ``ann_ivfpq_topk`` pipeline over everything ever added is
-        pytest-pinned AND oracle-checked via
-        ``ann_ivfpq_index_persisted``."""
+        ``emb`` supplies full vectors for the shortlist re-read only;
+        equivalence with the one-shot ``ann_ivfpq_topk`` pipeline over
+        everything ever added is pytest-pinned AND oracle-checked via
+        ``ann_ivfpq_index_persisted``.
+
+        The query side — the query vectors, each query's ``n_probe``
+        cells and the ADC lookup tables — is derived once per call,
+        before the corpus-side plan, and every consumer (probed-cell
+        semi join, candidate join, LUT join, exact re-rank) reads that
+        one copy. Left lazy, each consumer would re-derive it: re-scan
+        the caller's query frame (Python tasks, for a serving caller
+        that builds it from rows) and re-rank the cells. Each piece is
+        query-sized and is broadcast anyway, so holding it on the driver
+        adds no driver memory. Nothing is cached: the rows live in the
+        returned frame's plan and are released with it."""
         cb = self._codebook()
-        qcells = rank_against_centroids(
-            queries, self._centroids(), n_probe
-        ).select(F.col("vec_id").alias("query_id"), "embedding", "cent_id")
-        cells = qcells.select("cent_id").distinct()
-        probed = self.codes_table.read().join(
-            F.broadcast(cells), "cent_id", "semi"
-        )
-        qsub = _sub_explode(
-            qcells.select("query_id", "embedding").dropDuplicates(["query_id"])
-            .withColumnRenamed("query_id", "vec_id"),
-            "query_id",
-        )
-        lut = qsub.join(F.broadcast(cb), "j").select(
-            "query_id",
-            "j",
-            F.col("cent_id").alias("lut_cent"),
-            _d2_micro(F.col("sub"), F.col("c_sub")).alias("qd_micro"),
-        )
-        cand = (
-            probed.join(
-                F.broadcast(qcells.select("query_id", "cent_id")), "cent_id"
+        qv = _driver_local(queries.select("vec_id", "embedding"))
+        qcells = _driver_local(
+            rank_against_centroids(qv, self._centroids(), n_probe).select(
+                F.col("vec_id").alias("query_id"), "cent_id"
             )
-            .filter(F.col("vec_id") != F.col("query_id"))
+        )
+        lut = _driver_local(
+            _sub_explode(qv, "query_id")
+            .join(F.broadcast(cb), "j")
+            .select(
+                "query_id",
+                "j",
+                F.col("cent_id").alias("lut_cent"),
+                _d2_micro(F.col("sub"), F.col("c_sub")).alias("qd_micro"),
+            )
+        )
+        # a semi join's build side may repeat keys: no distinct needed
+        probed = self.codes_table.read().join(
+            F.broadcast(qcells.select("cent_id")), "cent_id", "semi"
+        )
+        cand = probed.join(F.broadcast(qcells), "cent_id").filter(
+            F.col("vec_id") != F.col("query_id")
         )
         adc = (
             cand.join(F.broadcast(lut), ["query_id", "j"])
@@ -419,7 +443,7 @@ class IVFPQIndex:
             .filter(F.col("rank") <= shortlist)
             .select("query_id", "vec_id")
         )
-        return _exact_rerank(emb, short, queries, k)
+        return _exact_rerank(emb, short, qv, k)
 
     def vec_count(self) -> int:
         """Vectors held (codes rows / PQ_M) — metadata-scale."""

@@ -104,8 +104,11 @@ class InvertedIndex:
                 return snap
             return table.append(rows, batch_token=batch_token)
 
-        _tokened(self.postings_table, postings)
-        return _tokened(self.doclens_table, doclens)
+        try:
+            _tokened(self.postings_table, postings)
+            return _tokened(self.doclens_table, doclens)
+        finally:
+            postings.unpersist()  # both commits have written their files
 
     def doc_count(self) -> int:
         try:

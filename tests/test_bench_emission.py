@@ -96,3 +96,37 @@ def test_final_line_without_ab_side():
     parsed = json.loads(line)
     assert "phases" not in parsed
     assert all(n in parsed["queries"] for n in bench.PRINT_FLOOR)
+
+
+def test_final_line_degrades_oversized_timings_before_floor_names():
+    """Over-long values overflow the tail capture: the line rounds them
+    and drops phases, alarms and non-floor names, keeping every floor
+    name, instead of failing the run."""
+    out, phases, timings = _r15_like_inputs()
+    timings = {n: 12345.678912345 for n in bench.HEADLINE}
+    line = bench._final_line(out, phases, timings)
+    assert len(line) <= 1990
+    parsed = json.loads(line)
+    assert all(parsed["queries"][n] == 12345.68 for n in bench.PRINT_FLOOR)
+    assert "missing_floor" not in parsed
+    assert parsed["queries_omitted"] == len(bench.HEADLINE) - len(
+        parsed["queries"]
+    )
+
+
+def test_final_line_lists_floor_names_that_cannot_fit():
+    """Headline fields alone leave too little room for the floor: the
+    floor names that do not fit are listed in missing_floor."""
+    out, phases, timings = _r15_like_inputs()
+    out["ab_baseline_ref"] = "x" * 450
+    line = bench._final_line(out, phases, timings)
+    assert len(line) <= 1990
+    parsed = json.loads(line)
+    assert "phases" not in parsed and "cpu_alarms" not in parsed
+    missing = parsed["missing_floor"]
+    assert missing
+    assert set(missing).isdisjoint(parsed["queries"])
+    assert set(missing) | set(parsed["queries"]) == set(bench.PRINT_FLOOR)
+    assert parsed["queries_omitted"] == len(bench.HEADLINE) - len(
+        parsed["queries"]
+    )

@@ -400,6 +400,24 @@ def test_inverted_index_serves_batch_bm25_exactly(spark, tmp_dir):
     assert idx.doc_count() == docs.count()
 
 
+def test_inverted_index_add_batch_releases_its_cache(spark, tmp_dir):
+    """add_batch persists the tokenized postings for its two commits
+    and releases them before returning: a fresh batch and a replayed
+    one leave no new persisted RDD behind."""
+    from event_to_lakehouse_spark.textindex import InvertedIndex
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    docs = _docs(spark).select("doc_id", "text")
+    idx = InvertedIndex(spark, f"{tmp_dir}/inv_cache")
+    before = persisted()
+    idx.add_batch(docs.filter(F.col("doc_id") < 100), batch_token="b0")
+    idx.add_batch(docs.filter(F.col("doc_id") < 100), batch_token="b0")
+    assert persisted() - before == set()
+    assert idx.doc_count() == 100
+
+
 def test_inverted_index_replay_and_maintain(spark, tmp_dir):
     """Replayed batch tokens are storage no-ops on BOTH tables; a
     crash between the two commits self-heals on retry; maintain()

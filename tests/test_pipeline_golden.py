@@ -201,8 +201,12 @@ def test_two_concurrent_silver_streams(spark, rapid7_bronze, forti_bronze, tmp_d
     )
     # both queries run concurrently in this session until drained
     assert {q.id for q in spark.streams.active} >= {q1.id, q2.id}
-    q1.awaitTermination(120)
-    q2.awaitTermination(120)
+    for q in (q1, q2):
+        # a timeout returns False; surface it here, not as a wrong count
+        assert q.awaitTermination(120), (
+            f"silver stream {q.id} did not drain within 120 s;"
+            f" exception: {q.exception()}"
+        )
     back = spark.read.parquet(out)
     assert back.count() == 4
     assert {

@@ -628,3 +628,55 @@ def test_coarse_n_iters_zero_is_bit_exact_stride_sample(spark):
     # one iteration still rides the grid (trained path unchanged)
     trained = coarse_centroids_trained(emb, stride, 1)
     assert trained.count() == len(want)
+
+
+def test_ivfpq_topk_evaluates_each_query_row_once(spark, tmp_dir):
+    """A serving caller builds its query frame from Python rows. topk
+    derives the query side (vectors, probed cells, LUTs) once per call,
+    so each query row is evaluated exactly once however many stages
+    consume it, and no cached RDD is left behind; a full probe with a
+    corpus-wide shortlist is exact k-NN against a NumPy brute force."""
+    import numpy as np
+
+    from event_to_lakehouse_spark.similarity.ivfpq import IVFPQIndex
+
+    emb = load_tables(spark, SF)["embeddings"].select("vec_id", "embedding")
+    idx = IVFPQIndex.build(spark, f"{tmp_dir}/ivfpq", train=emb)
+    idx.add_batch(emb, batch_token="all")
+    corpus = emb.orderBy("vec_id").collect()
+    ids = np.array([r.vec_id for r in corpus])
+    mat = np.array([r.embedding for r in corpus], dtype=np.float64)
+    rng = np.random.default_rng(7)
+    noise = rng.normal(0, 0.05, (4, mat.shape[1]))
+    rows = [
+        (-(i + 1), np.float32(mat[i * 37] + noise[i]).tolist()) for i in range(4)
+    ]
+
+    sc = spark.sparkContext
+    seen = sc.accumulator(0)
+
+    def tick(row):
+        seen.add(1)
+        return row
+
+    queries = spark.createDataFrame(
+        sc.parallelize(rows).map(tick), "vec_id long, embedding array<float>"
+    )
+    persisted = sc._jsc.getPersistentRDDs().size()
+    got = idx.topk(
+        emb, queries, k=PQ_TOPK, n_probe=idx.n_centroids, shortlist=len(corpus)
+    ).collect()
+    assert seen.value == len(rows)
+    assert sc._jsc.getPersistentRDDs().size() <= persisted  # nothing cached
+
+    by_q: dict[int, list] = defaultdict(list)
+    for r in sorted(got, key=lambda r: (r.query_id, r.rank)):
+        by_q[r.query_id].append((r.vec_id, r.l2_dist))
+    for qid, qvec in rows:
+        d = ((mat - np.asarray(qvec, dtype=np.float64)) ** 2).sum(axis=1)
+        want = ids[np.lexsort((ids, d))][:PQ_TOPK]
+        served = by_q[qid]
+        assert [v for v, _ in served] == want.tolist()
+        true_d = dict(zip(ids.tolist(), d))
+        for vid, dist in served:
+            assert abs(dist - true_d[vid]) <= 1e-5 * max(1.0, true_d[vid])
