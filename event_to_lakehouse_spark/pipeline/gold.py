@@ -434,7 +434,9 @@ def gold_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ``hist_key`` = (asset_uid, version) and a ``closed`` ordinal, so
 # "close the open row" is a latest-wins merge where the closed copy
 # (closed=1) beats the stored open copy (closed=0) — no row-level
-# UPDATE primitive needed.
+# UPDATE primitive needed. The open row also carries ``last_ts``, the
+# key's latest applied event time (its lateness watermark); advancing
+# it is the same merge, where the batch's open copy wins the tie.
 
 _SCD2_COLS = [
     "asset_uid", "state", "valid_from", "valid_to", "is_current", "version",
@@ -446,6 +448,7 @@ def _scd2_finish(versions: DataFrame) -> DataFrame:
     onto computed version rows."""
     return versions.select(
         *_SCD2_COLS,
+        "last_ts",
         F.concat_ws(":", F.col("asset_uid"), F.col("version")).alias("hist_key"),
         (~F.col("is_current")).cast("int").alias("closed"),
     )
@@ -460,11 +463,16 @@ def scd2_apply_batch(
     """Apply one event batch (asset_uid, state, ts, event_id) to the
     SCD2 history held in ``table`` (a SnapshotTable).
 
-    Batches must be time-ordered per key: an event older than its key's
-    open-version ``valid_from`` is LATE — counted, dropped, reported
-    (rewriting closed history needs a backfill recompute, not a merge).
-    Within that contract the result equals ``gold_scd2_history`` over
-    the union of all applied batches (pytest-pinned).
+    Batches must be time-ordered per key: an event older than the
+    latest event already applied for its key (the open version's
+    ``last_ts``) is LATE — counted, dropped, reported (rewriting
+    history needs a backfill recompute, not a merge). Checking against
+    the open version's ``valid_from`` instead is not enough: an event
+    between ``valid_from`` and a later same-state event folded into the
+    open version would have to split it there, and the folded events
+    are not stored. Within that contract the result equals
+    ``gold_scd2_history`` over the union of all applied batches
+    (pytest-pinned).
 
     Scale shape: the open-row lookup is a key-co-partitioned join
     against an is_current filter (on Iceberg/Delta this is the
@@ -489,6 +497,7 @@ def scd2_apply_batch(
                 "asset_uid",
                 F.col("state").alias("_open_state"),
                 F.col("valid_from").alias("_vf"),
+                F.col("last_ts").alias("_wm"),
                 F.col("version").alias("_base_version"),
             )
         )
@@ -496,10 +505,10 @@ def scd2_apply_batch(
     if open_info is not None:
         joined = events.join(open_info, "asset_uid", "left")
         late = joined.filter(
-            F.col("_vf").isNotNull() & (F.col("ts") < F.col("_vf"))
+            F.col("_wm").isNotNull() & (F.col("ts") < F.col("_wm"))
         )
         n_late = late.count()
-        ok = joined.filter(F.col("_vf").isNull() | (F.col("ts") >= F.col("_vf")))
+        ok = joined.filter(F.col("_wm").isNull() | (F.col("ts") >= F.col("_wm")))
         # seed: the open version as a pseudo-event ordered BEFORE any
         # batch event at the same timestamp (event_id -1)
         seed = open_info.select(
@@ -526,6 +535,9 @@ def scd2_apply_batch(
     flagged = stream.select(
         "asset_uid", "state", "ts", "event_id", "_is_seed", "_base_version",
         F.lag("state").over(w).alias("_prev"),
+        # the key's new watermark; the seed's valid_from never exceeds
+        # an accepted event's ts
+        F.max("ts").over(Window.partitionBy("asset_uid")).alias("_seen"),
     )
     # `ts` keeps its name through the second window — renaming it here
     # would break alias-aware partitioning propagation and re-shuffle
@@ -533,14 +545,16 @@ def scd2_apply_batch(
     changes = flagged.filter(
         (F.col("_is_seed") == 0)
         & (F.col("_prev").isNull() | (F.col("_prev") != F.col("state")))
-    ).select("asset_uid", "state", "ts", "event_id", "_base_version")
+    ).select("asset_uid", "state", "ts", "event_id", "_base_version", "_seen")
     w2 = Window.partitionBy("asset_uid").orderBy("ts", "event_id")
+    is_open = F.lead("ts").over(w2).isNull()
     new_versions = changes.select(
         "asset_uid",
         "state",
         F.col("ts").alias("valid_from"),
         F.lead("ts").over(w2).alias("valid_to"),
-        F.lead("ts").over(w2).isNull().alias("is_current"),
+        is_open.alias("is_current"),
+        F.when(is_open, F.col("_seen")).alias("last_ts"),
         (
             F.coalesce(F.col("_base_version"), F.lit(0))
             + F.row_number().over(w2)
@@ -549,21 +563,31 @@ def scd2_apply_batch(
 
     updates = _scd2_finish(new_versions)
     if open_info is not None:
-        # close the formerly-open row of every key the batch changed
+        # rewrite the formerly-open row of every key with accepted
+        # events: closed where the batch changed its state, else kept
+        # open with its watermark advanced (skipped when it did not move)
         first_change = changes.groupBy("asset_uid").agg(
             F.min("ts").alias("_close_ts")
         )
-        closures = open_info.join(first_change, "asset_uid").select(
-            "asset_uid",
-            F.col("_open_state").alias("state"),
-            F.col("_vf").alias("valid_from"),
-            F.col("_close_ts").alias("valid_to"),
-            F.lit(False).alias("is_current"),
-            F.col("_base_version").alias("version"),
+        seen = ok.groupBy("asset_uid").agg(F.max("ts").alias("_seen"))
+        kept_open = F.col("_close_ts").isNull()
+        old_open = (
+            open_info.join(seen, "asset_uid")
+            .join(first_change, "asset_uid", "left")
+            .filter(~kept_open | (F.col("_seen") > F.col("_wm")))
+            .select(
+                "asset_uid",
+                F.col("_open_state").alias("state"),
+                F.col("_vf").alias("valid_from"),
+                F.col("_close_ts").alias("valid_to"),
+                kept_open.alias("is_current"),
+                F.when(kept_open, F.col("_seen")).alias("last_ts"),
+                F.col("_base_version").alias("version"),
+            )
         )
-        updates = updates.unionByName(_scd2_finish(closures))
+        updates = updates.unionByName(_scd2_finish(old_open))
 
-    n_new = updates.filter(F.col("is_current")).count()
+    n_new = new_versions.filter(F.col("is_current")).count()
     snap = table.merge(
         updates,
         key="hist_key",

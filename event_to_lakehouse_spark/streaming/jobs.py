@@ -470,9 +470,9 @@ def scd2_history_stream(
     state store, no watermark; a restart resumes from the source
     checkpoint and the already-applied tokens make overlap harmless.
     Micro-batch ordering IS the time ordering contract: file streams
-    deliver in arrival order, so late-vs-open-version events are
-    counted and dropped by the batch apply (its documented late-data
-    semantics)."""
+    deliver in arrival order, so an event older than its key's latest
+    applied event is counted and dropped by the batch apply (its
+    documented late-data semantics)."""
     from ..pipeline.gold import scd2_apply_batch
     from ..storage.snapshots import SnapshotTable
 

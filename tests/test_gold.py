@@ -294,9 +294,9 @@ def test_scd2_incremental_replay_and_late(spark, tmp_dir):
     before = table.read().count()
     # a batch entirely older than the open versions: all rows late-drop
     res = scd2_apply_batch(table, batches[0], batch_token="late0")
-    # every non-first-arrival event of batch 0 is late; first-arrival
-    # duplicates collapse against the identical seed state, so nothing
-    # changes
+    # every event of batch 0 older than its key's latest is late; the
+    # re-sent latest ones collapse against the identical seed state, so
+    # nothing changes
     assert res["n_late_dropped"] > 0
     assert table.read().count() == before
 

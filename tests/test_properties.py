@@ -318,7 +318,7 @@ def test_interval_islands_match_sweep_reference(spark):
 # structures so structural edge cases (stars, chains, ties) are
 # exercised, with few examples (each spins Spark jobs).
 
-from hypothesis import HealthCheck, settings
+from hypothesis import HealthCheck, example, settings
 
 # Example budget for the Spark-bound property tests below. The CI
 # default stays small (each example spins real Spark jobs); soak runs
@@ -1331,13 +1331,22 @@ def _scd2_model(accepted):
         max_size=3,
     )
 )
+# an event between the open version's valid_from and a later same-state
+# event already folded into it (key 0: s0@0 arrives after s2@2)
+@example(
+    ops=[
+        ([(0, 0, 0), (0, 2, 0), (1, 0, 0)], False, False),
+        ([(0, 2, 2), (1, 0, 0), (1, 0, 0)], False, False),
+        ([(0, 0, 0)], False, False),
+    ]
+)
 def test_scd2_apply_batch_model_property(spark, ops):
     """Under ANY sequence of event batches — partial lateness, equal
     timestamps, replays, commit-gap crashes with retry — the table
     after every completed op equals the pure-Python SCD2 model over
     the union of ACCEPTED events, the late count matches the model's
-    drop rule (ts < the PRE-batch open version's valid_from), and a
-    replayed token leaves the storage version untouched.
+    drop rule (ts < the key's latest event accepted BEFORE the batch),
+    and a replayed token leaves the storage version untouched.
 
     Event ids grow monotonically across batches (the real log's
     shape); within that contract the equivalence is exact, including
@@ -1364,13 +1373,13 @@ def test_scd2_apply_batch_model_property(spark, ops):
         df = spark.createDataFrame(
             rows, "asset_uid long, state string, ts long, event_id long"
         )
-        # model late rule: vs the PRE-batch open version's valid_from
-        open_vf = {
-            r[0]: r[2] for r in _scd2_model(accepted) if r[4]
-        }
+        # model late rule: vs the key's latest PRE-batch accepted ts
+        last_ts: dict = {}
+        for uid, _, ts, _ in accepted:
+            last_ts[uid] = max(ts, last_ts.get(uid, ts))
         acc = [
             r for r in rows
-            if r[0] not in open_vf or r[2] >= open_vf[r[0]]
+            if r[0] not in last_ts or r[2] >= last_ts[r[0]]
         ]
         token = f"b{n}"
         if crash:
